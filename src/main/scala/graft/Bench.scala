@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // sample machine load BEFORE the session/warmup spin up their own
@@ -15,14 +15,7 @@ object Bench {
     // start and end are what let the artifact label that case itself
     val calibStart = graft.tools.Calib.best()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     // ERROR: Spark's "function X replaced a previously registered function"
     // WARNs (and executor chatter) must not interleave with the one-line
     // JSON result the driver parses from stdout.

@@ -1,7 +1,6 @@
 package graft
 
-import graft.core.{ColumnSpec, SourceConfig}
-import org.apache.spark.sql.SparkSession
+import graft.core.{ColumnSpec, GraftSession, SourceConfig}
 import org.apache.spark.sql.functions._
 
 /** CDC-read scale rehearsal: measure [[graft.store.TableStore
@@ -33,14 +32,7 @@ object CdcScaleBench {
     val work = args(0)
     val rows = args.lift(1).map(_.toLong).getOrElse(3000000L)
     val deltaKeys = args.lift(2).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val wh = s"$work/wh"
     val p = new org.apache.hadoop.fs.Path(wh)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

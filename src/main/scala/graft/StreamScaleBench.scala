@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Streaming-release scale rehearsal: drain a (synthetic, see
@@ -36,15 +36,7 @@ object StreamScaleBench {
     val src = args(0)
     val work = args(1)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val feed = s"$work/feed"
     val wh = s"$work/wh"
     val cp = s"$work/cp"
@@ -89,44 +81,6 @@ object StreamScaleBench {
           ()
         }
       })
-    // GRAFT_STREAMSCALE_JOBS=1: per-job input-row lines on stderr for
-    // attribution forensics (the [[graft.tools.ReleaseCost]] instrument)
-    if (sys.env.contains("GRAFT_STREAMSCALE_JOBS")) {
-      val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-      val jobRows = new java.util.concurrent.ConcurrentHashMap[Int,
-        java.util.concurrent.atomic.AtomicLong]()
-      val jobDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
-            jobDesc.put(js.jobId, Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))
-                .orElse(Option(p.getProperty("callSite.short"))))
-              .getOrElse("?"))
-            ()
-          }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val j = stageToJob.getOrDefault(te.stageId, -1)
-            if (j >= 0) Option(te.taskMetrics).foreach { m =>
-              jobRows.computeIfAbsent(j,
-                _ => new java.util.concurrent.atomic.AtomicLong())
-                .addAndGet(m.inputMetrics.recordsRead)
-            }
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val r = Option(jobRows.get(je.jobId)).map(_.get()).getOrElse(0L)
-            if (r > 10000)
-              System.err.println(s"[job ${je.jobId}] rows=$r " +
-                s"site=${jobDesc.getOrDefault(je.jobId, "?")}")
-            ()
-          }
-        })
-    }
     val walls = scala.collection.mutable.ArrayBuffer[(Long, Double, Long)]()
     val lastRows = new java.util.concurrent.atomic.AtomicLong()
     val t0 = System.nanoTime()

@@ -15,17 +15,18 @@ import org.apache.spark.sql.SparkSession
   *    ~2-3x total cores
   */
 object GraftSession {
-  def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-    math.max(4, Runtime.getRuntime.availableProcessors()).toString)
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
 
-  def builder(master: String = s"local[$localCpus]",
-              shufflePartitions: Int = -1): SparkSession.Builder = {
-    val sp = if (shufflePartitions > 0) shufflePartitions
-             else localCpus.toInt
+  /** `local[cores]` with one shuffle partition per core: the two are set
+    * together so they cannot disagree. The only place a SparkSession is
+    * built — mains call [[getOrCreate]], tests `builder(cores = 4)`.
+    */
+  def builder(cores: Int = localCpus): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", sp.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -37,7 +38,6 @@ object GraftSession {
       // whichever type arrives (sources/SchemaProbe).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

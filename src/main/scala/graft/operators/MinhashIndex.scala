@@ -544,8 +544,8 @@ object MinhashIndex {
     // sampled-schema read could drop (or null out) the column either way
     // cached like keep: hashes has two consumers of its own (the keep
     // aggregation and the superseded-registry anti-join) — uncached,
-    // compaction paid TWO full hash-table scans per fold (ReleaseCost's
-    // per-job forensics under the "index compact" phase)
+    // compaction paid TWO full hash-table scans per fold (measured per
+    // job under the "corpus: index compact" job-description label)
     val hashes = withAseq(spark.read.option("mergeSchema", "true")
       .parquet(genHashesDir(spark, indexDir, live))).cache()
     // newest content per doc_id; the GC point. O(index) once per

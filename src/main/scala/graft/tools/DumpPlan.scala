@@ -1,39 +1,46 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Write a declared query's physical plan (`explain("formatted")`) to a
-  * file — the evidence artifact the optimization rounds commit under
-  * `plans/rNN/`. Uses the [[graft.queries.TrainingData.planOnly]] seam so
-  * operators that materialize their small result (collect + local frame)
-  * expose the REAL composed plan instead of a `Scan ExistingRDD` stub.
+/** Dump declared queries' physical plans (`explain("formatted")`) for plan
+  * auditing — pushdown, broadcast choices, exchanges — and as the evidence
+  * artifact the optimization rounds commit under `plans/rNN/`. Uses the
+  * [[graft.queries.TrainingData.planOnly]] seam so operators that
+  * materialize their small result (collect + local frame) expose the REAL
+  * composed plan instead of a `Scan ExistingRDD` stub.
   *
-  * Usage: `runMain graft.tools.DumpPlan <query> <sfDir> <outFile>`
+  * Usage: `runMain graft.tools.DumpPlan <sfDir> [query] [outFile]` — no
+  * query dumps every declared query; no outFile prints to stdout.
   */
 object DumpPlan {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val dir = args(1)
-    val out = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val dir = args(0)
+    val only = args.lift(1)
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.VectorFunctions.register(spark)
-    val df = graft.queries.TrainingData.planOnly.withValue(true) {
-      graft.SparkEntry.queries(name)(spark, dir)
+    def plan(name: String): String = {
+      val df = graft.queries.TrainingData.planOnly.withValue(true) {
+        graft.SparkEntry.queries(name)(spark, dir)
+      }
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     }
-    val p = df.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(out), p.getBytes)
-    println(s"plan: $out (${p.length} chars, " +
-      s"""${"Exchange \\(".r.findAllIn(p).length} exchanges)""")
+    args.lift(2) match {
+      case Some(file) =>
+        val p = plan(args(1))
+        java.nio.file.Files.write(java.nio.file.Paths.get(file), p.getBytes)
+        println(s"plan: $file (${p.length} chars, " +
+          s"""${"Exchange \\(".r.findAllIn(p).length} exchanges)""")
+      case None =>
+        val names = only.map(Seq(_))
+          .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
+        names.foreach { name =>
+          println(s"\n===== $name =====")
+          try println(plan(name))
+          catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+        }
+    }
     spark.stop()
   }
 }

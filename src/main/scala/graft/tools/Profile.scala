@@ -1,197 +1,57 @@
 package graft.tools
 
-import graft.functions.{TextFunctions => F, VectorFunctions}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
-/** Scratch profiler for the minhash pipeline stages. */
+/** Paper-scale pipeline run: one 2M-row parquet file through the whole
+  * pipeline (`Processor.processFile`), printing rows, counters, wall and
+  * throughput on one `[info2m]` line.
+  *
+  * Usage: `runMain graft.tools.Profile <sfDir> pipeline2m`
+  */
 object Profile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // SPARK_GRAFT_CPUS mirrors Bench's environment (local[4]) when set —
-    // profiling in a different core count than the bench hides task-count
-    // sensitive costs (dynamic-partition write fan-out, tiny-file commits)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.lift(1).contains("pipeline2m"),
+      "usage: Profile <sfDir> pipeline2m")
+    val spark = GraftSession.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    VectorFunctions.register(spark)
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"$name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    if (args.lift(1).contains("pipeline2m")) {
-      // BASELINE-scale experiment: the reference's published number is a
-      // 2M-row file end-to-end (README.md:334-343, ~124 s best backend).
-      // Replicate orders with offset keys to 2M unique-grain rows, write
-      // one parquet file, run the COMPLETE pipeline on it.
-      val orders = spark.read.parquet(s"$dir/orders.parquet")
-      val n = orders.count()
-      val copies = math.max(1, (2000000 / n).toInt)
-      val big = (0 until copies).map(i =>
-        orders.withColumn("o_orderkey", col("o_orderkey") + lit(i * 10000000L)))
-        .reduce(_ unionByName _)
-      val work = java.nio.file.Files.createTempDirectory("graft_2m")
-      val bigDir = work.resolve("big").toString
-      big.coalesce(4).write.parquet(bigDir)
-      // single logical file input: point the pipeline at the whole dir by
-      // copying parts into the drop dir as one parquet file is not needed —
-      // ParquetReader takes a path; give it the directory
-      val drop = java.nio.file.Files.createDirectories(work.resolve("drop"))
-      val dropPath = drop.resolve("orders_big.parquet")
-      // merge parts into one file for a faithful single-file drop
-      spark.read.parquet(bigDir).coalesce(1).write
-        .parquet(work.resolve("one").toString)
-      val part = java.nio.file.Files.list(work.resolve("one")).toArray
-        .map(_.toString).filter(_.endsWith(".parquet")).head
-      java.nio.file.Files.copy(java.nio.file.Paths.get(part), dropPath)
-      val store = new graft.store.TableStore(spark, work.resolve("tables").toString)
-      val files = new graft.run.FileOps(spark.sparkContext.hadoopConfiguration,
-        work.resolve("archive").toString, work.resolve("duplicates").toString)
-      val proc = new graft.run.Processor(spark,
-        new graft.core.SourceRegistry(Seq(graft.queries.PipelineBench.OrdersSource)),
-        store, files, new graft.run.CollectingNotifier, drop.toString)
-      val rows = spark.read.parquet(dropPath.toString).count()
-      val t0 = System.nanoTime()
-      val r = proc.processFile(dropPath.toString).get
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[info2m] rows=$rows read=${r.recordsRead} inserts=${r.publishInserts} " +
-        f"wall=${secs}%.1f s throughput=${rows / secs}%.0f rows/s")
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("pipeline")) {
-      val orders = spark.read.parquet(s"$dir/orders.parquet")
-      time("plain count")(orders.count())
-      time("zipWithIndex count")(
-        graft.sources.Reader.withRowNumbers(orders, 1).count())
-      time("validate compile count")(
-        graft.operators.Validator.compile(
-          graft.sources.Reader.withRowNumbers(orders, 1),
-          graft.queries.PipelineBench.OrdersSource, "x", 0L).count())
-      // per-job breakdown of the full pipeline
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, (System.nanoTime(),
-            Option(j.properties.getProperty("spark.job.description"))
-              .orElse(Option(j.properties.getProperty("callSite.short"))).getOrElse("?")))
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val (t0, desc) = starts.getOrDefault(j.jobId, (0L, "?"))
-          println(f"  job ${j.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%6.2f s  $desc")
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      time("full pipeline_etl")(
-        graft.queries.PipelineBench.pipelineEtl(spark, dir).head())
-      Thread.sleep(500)
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("writebench")) {
-      // isolate the bucketed-publish write/read costs at bench scale
-      import org.apache.spark.sql.functions.{pmod, xxhash64}
-      val orders = spark.read.parquet(s"$dir/orders.parquet").cache()
-      println(s"rows=${orders.count()}")
-      val work = java.nio.file.Files.createTempDirectory("graft_wb")
-      def wdir(n: String) = work.resolve(n).toString
-      time("plain write (no buckets)")(
-        orders.write.parquet(wdir("plain")))
-      for (n <- Seq(32, 64, 256)) {
-        val b = orders.withColumn("_bucket",
-          pmod(xxhash64(col("o_orderkey")), lit(n.toLong)))
-        time(s"bucketed write n=$n")(
-          b.repartition(col("_bucket"))
-            .write.partitionBy("_bucket").parquet(wdir(s"b$n")))
-        val paths = (0 until n).map(k => s"${wdir(s"b$n")}/_bucket=$k")
-          .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-        time(s"manifested read n=$n")(
-          spark.read.parquet(paths: _*).count())
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("mhnovel")) {
-      // per-JOB wall attribution inside the persisted-index probe — the
-      // bench's dedup_index_novel geometry (80/20 split of the bench's
-      // doc slice), with every Spark job's duration + call site printed
-      // so probe cost is located, not guessed
-      val nDocs = args.lift(2).map(_.toInt).getOrElse(5000)
-      val jobT0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val jobSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobT0.put(js.jobId, System.nanoTime())
-            jobSite.put(js.jobId, Option(js.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short")))
-              .getOrElse("?"))
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val w = Option(jobT0.get(je.jobId))
-              .map(t => (System.nanoTime() - t) / 1e9).getOrElse(-1.0)
-            if (w > 0.03)
-              println(f"  [job ${je.jobId}%3d] ${w}%6.2f s  " +
-                jobSite.getOrDefault(je.jobId, "?"))
-            ()
-          }
-        })
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 15),
-        16, 10).cast("long") % 100
-      val d = spark.read.parquet(s"$dir/documents.parquet")
-        .orderBy("doc_id").limit(nDocs)
-        .select(col("doc_id"), col("text"), (bucket < 80).as("is_corpus"))
-        .cache()
-      d.count()
-      val corpus = d.filter(col("is_corpus")).select("doc_id", "text")
-      val batch = d.filter(!col("is_corpus")).select("doc_id", "text")
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_prof_mh").toString
-      time("build")(graft.operators.MinhashIndex.build(corpus, idx))
-      println("--- probe jobs ---")
-      val novel = time("probe: novelDocs call (lazy+checkpoints)")(
-        graft.operators.MinhashIndex.novelDocs(spark, batch, idx))
-      time("probe: count")(println(s"  novel=${novel.count()}"))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(idx))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("queries")) {
-      // repeat-time individual queries (name list after the mode arg)
-      val names = args.drop(2).toSeq match {
-        case Nil => Seq("dedup_minhash_lsh", "curate_corpus")
-        case xs => xs
-      }
-      spark.read.parquet(s"$dir/documents.parquet").count() // warm FS cache
-      for (n <- names; i <- 1 to 2)
-        time(s"$n run$i")(graft.SparkEntry.queries(n)(spark, dir).collect())
-      spark.stop(); return
-    }
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val withIds = docs.select(col("doc_id"),
-      VectorFunctions.shingleIds(col("text"), 2).as("ids"))
-      .withColumn("sig", VectorFunctions.minhashSig(col("ids"), 16))
-      .cache()
-    time("1 ids+sig+cache")(withIds.count())
-    val banded = withIds.select(col("doc_id"),
-      explode(F.bandKeys(col("sig"), 8, 2)).as("band"))
-    time("2 banded")(banded.count())
-    val cand = banded.select(col("doc_id").as("doc_a"), col("band"))
-      .join(banded.select(col("doc_id").as("doc_b"), col("band")), Seq("band"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct().cache()
-    val nc = time("3 candidates")(cand.count())
-    println(s"  candidates=$nc")
-    val verified = cand
-      .join(withIds.select(col("doc_id").as("doc_a"), col("ids").as("ids_a")), Seq("doc_a"))
-      .join(withIds.select(col("doc_id").as("doc_b"), col("ids").as("ids_b")), Seq("doc_b"))
-      .select(VectorFunctions.jaccardIds(col("ids_a"), col("ids_b")).as("j"))
-      .agg(count(lit(1)), count(when(col("j") >= 0.2, 1)))
-    time("4 verify")(verified.head())
+    // BASELINE-scale experiment: the reference's published number is a
+    // 2M-row file end-to-end (README.md:334-343, ~124 s best backend).
+    // Replicate orders with offset keys to 2M unique-grain rows, write
+    // one parquet file, run the COMPLETE pipeline on it.
+    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    val n = orders.count()
+    val copies = math.max(1, (2000000 / n).toInt)
+    val big = (0 until copies).map(i =>
+      orders.withColumn("o_orderkey", col("o_orderkey") + lit(i * 10000000L)))
+      .reduce(_ unionByName _)
+    val work = java.nio.file.Files.createTempDirectory("graft_2m")
+    val bigDir = work.resolve("big").toString
+    big.coalesce(4).write.parquet(bigDir)
+    // single logical file input: point the pipeline at the whole dir by
+    // copying parts into the drop dir as one parquet file is not needed —
+    // ParquetReader takes a path; give it the directory
+    val drop = java.nio.file.Files.createDirectories(work.resolve("drop"))
+    val dropPath = drop.resolve("orders_big.parquet")
+    // merge parts into one file for a faithful single-file drop
+    spark.read.parquet(bigDir).coalesce(1).write
+      .parquet(work.resolve("one").toString)
+    val part = java.nio.file.Files.list(work.resolve("one")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).head
+    java.nio.file.Files.copy(java.nio.file.Paths.get(part), dropPath)
+    val store = new graft.store.TableStore(spark, work.resolve("tables").toString)
+    val files = new graft.run.FileOps(spark.sparkContext.hadoopConfiguration,
+      work.resolve("archive").toString, work.resolve("duplicates").toString)
+    val proc = new graft.run.Processor(spark,
+      new graft.core.SourceRegistry(Seq(graft.queries.PipelineBench.OrdersSource)),
+      store, files, new graft.run.CollectingNotifier, drop.toString)
+    val rows = spark.read.parquet(dropPath.toString).count()
+    val t0 = System.nanoTime()
+    val r = proc.processFile(dropPath.toString).get
+    val secs = (System.nanoTime() - t0) / 1e9
+    println(f"[info2m] rows=$rows read=${r.recordsRead} inserts=${r.publishInserts} " +
+      f"wall=${secs}%.1f s throughput=${rows / secs}%.0f rows/s")
     spark.stop()
   }
 }

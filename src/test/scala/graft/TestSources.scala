@@ -146,13 +146,7 @@ object TestSources {
 /** One shared local session for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val s = graft.core.GraftSession.builder(cores = 4).appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
